@@ -167,3 +167,68 @@ def test_prefix_filter_is_superset_of_lsh_and_exact(spark):
     for pair, j in lsh.items():
         assert exact[pair] == j
     assert all(j >= 0.5 for j in exact.values())
+
+
+def test_digest_bitmaps_builds_from_the_given_column(spark):
+    """The bitmap words come from the column passed in (any name), and the
+    width is the module's one BITMAP_WORDS constant: word k of a set holds
+    bit ``d mod 64`` for every digest d with ``(d mod 64·BITMAP_WORDS) div
+    64 == k``."""
+    from universal_aws_data_pipeline_spark.operators import dedup
+
+    sets = [[0, 63, 64, 255, 256, 511], [-1, -64, -257, 1 << 59, (1 << 60) - 1], [], [7, 7 + 256]]
+    df = spark.createDataFrame([(s,) for s in sets], "digs ARRAY<LONG>")
+    words = dedup._digest_bitmaps(F.col("digs"))
+    got = [list(r) for r in df.select(*words).collect()]
+
+    assert len(words) == dedup.BITMAP_WORDS
+
+    def expect(digests):
+        out = [0] * dedup.BITMAP_WORDS
+        for d in digests:
+            out[(d % (64 * dedup.BITMAP_WORDS)) // 64] |= 1 << (d % 64)
+        return [w - (1 << 64) if w >= 1 << 63 else w for w in out]  # as signed longs
+
+    assert got == [expect(s) for s in sets]
+
+
+def test_similarity_joins_and_probes_release_what_they_persist(spark, tmp_path):
+    """The prefix-filter joins, the indexed probes and the streaming
+    maintainer leave no entry in Spark's cache once their actions ran."""
+    from universal_aws_data_pipeline_spark.operators.dedup import (
+        build_neardup_index,
+        containment_pairs_prefix_filter,
+        incremental_containment_filter_indexed,
+        incremental_neardup_filter_indexed,
+        jaccard_pairs_prefix_filter,
+        load_neardup_index,
+        neardup_stream_fn,
+    )
+
+    spark.catalog.clearCache()
+    base = " ".join(f"tok{i}" for i in range(30))
+    docs = spark.createDataFrame(
+        [(1, base), (2, base), (3, " ".join(f"alt{i}" for i in range(12)))],
+        "doc_id LONG, text STRING",
+    )
+    assert jaccard_pairs_prefix_filter(docs, threshold=0.5).count() == 1
+    assert containment_pairs_prefix_filter(docs, threshold=0.8).count() == 2
+
+    idx_path = str(tmp_path / "idx")
+    build_neardup_index(docs.filter("doc_id = 1"), idx_path)
+    index = load_neardup_index(spark, idx_path)
+    batch = docs.filter("doc_id > 1")
+    assert incremental_neardup_filter_indexed(batch, index, threshold=0.5).count() == 1
+    assert incremental_containment_filter_indexed(batch, index, threshold=0.8).count() == 1
+
+    fn = neardup_stream_fn(idx_path, str(tmp_path / "out"), threshold=0.6)
+    for batch_id in range(3):
+        fn(
+            spark.createDataFrame(
+                [(10 + batch_id, " ".join(f"b{batch_id}w{i}" for i in range(12)))],
+                "doc_id LONG, text STRING",
+            ),
+            batch_id,
+        )
+    assert spark.read.parquet(str(tmp_path / "out")).count() == 3
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -446,6 +446,17 @@ def test_ppjoin_exact_verify_stage_survives(spark, sf_dir, name):
     assert re.search(r"array_intersect\(sh_a", plan), plan  # exact string verify
 
 
+def test_ppjoin_digest_explode_is_linear(spark, sf_dir):
+    """The prefix miner explodes a digest-set COLUMN. Exploded as an
+    expression, the digest array was carried past the explode and the
+    projection above re-ran ``size(array_distinct(..))`` once per exploded
+    row: quadratic in document length. (q75 runs the same miner but
+    checkpoints its prefix table, so its final plan shows no explode.)"""
+    plan = _plan(spark, sf_dir, "q110_containment_dedup")
+    assert "Generate explode(" in plan, plan
+    assert "explode(array_distinct(" not in plan, plan
+
+
 @pytest.mark.parametrize(
     "name,needles",
     [

@@ -137,30 +137,72 @@ def test_span_overlap_first_doc_never_duplicated(spark, texts):
     assert all(0.0 <= r["dup_span_frac"] <= 1.0 for r in rows.values())
 
 
+def _shingles(txt: str) -> set:
+    toks = re.sub(r"[^a-z0-9]+", " ", txt.lower()).strip().split(" ")
+    if len(toks) >= 3:
+        return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
+    return {" ".join(toks)}
+
+
+def _round4(x: float) -> float:
+    """Spark's ``round(x, 4)``: half-up on the shortest decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(x)).quantize(Decimal("0.0001"), ROUND_HALF_UP))
+
+
+def _brute_force_pairs(texts: list[str], t: float) -> tuple[dict, dict]:
+    """All-pairs answers of both prefix-filter joins: unordered pairs with
+    round(J, 4) >= t, and ordered pairs with unrounded containment >= t."""
+    sh = {i: _shingles(txt) for i, txt in enumerate(texts)}
+    jac, cont = {}, {}
+    for a in sh:
+        for b in sh:
+            inter = len(sh[a] & sh[b])
+            j = _round4(inter / len(sh[a] | sh[b]))
+            if a < b and j >= t:
+                jac[(a, b)] = j
+            if a != b and inter / len(sh[a]) >= t:
+                cont[(a, b)] = _round4(inter / len(sh[a]))
+    return jac, cont
+
+
+def _prefix_filter_pairs(spark, texts: list[str], t: float) -> tuple[dict, dict]:
+    from universal_aws_data_pipeline_spark.operators.dedup import (
+        containment_pairs_prefix_filter,
+        jaccard_pairs_prefix_filter,
+    )
+
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id LONG, text STRING")
+    jac = {(r["id_a"], r["id_b"]): r["jaccard"] for r in jaccard_pairs_prefix_filter(df, threshold=t).collect()}
+    cont = {
+        (r["id_a"], r["id_b"]): r["containment"]
+        for r in containment_pairs_prefix_filter(df, threshold=t).collect()
+    }
+    return jac, cont
+
+
 @settings(max_examples=5, deadline=None)
 @given(st.lists(WORDS, min_size=2, max_size=6), st.sampled_from([0.5, 0.7, 0.9]))
 def test_containment_join_matches_brute_force(spark, texts, t):
-    """The asymmetric prefix filter equals brute-force ordered-pair
-    containment for ANY corpus and threshold."""
-    from universal_aws_data_pipeline_spark.operators.dedup import containment_pairs_prefix_filter
+    """Both prefix-filter measures equal brute force for ANY corpus and
+    threshold: the Jaccard join (rounded to 4 dp) and the asymmetric
+    containment join (unrounded), pairs and reported values."""
+    assert _prefix_filter_pairs(spark, texts, t) == _brute_force_pairs(texts, t)
 
-    df = spark.createDataFrame(list(enumerate(texts)), "doc_id LONG, text STRING")
-    got = {(r["id_a"], r["id_b"]) for r in containment_pairs_prefix_filter(df, threshold=t).collect()}
 
-    def shingles(txt: str) -> set:
-        toks = re.sub(r"[^a-z0-9]+", " ", txt.lower()).strip().split(" ")
-        if len(toks) >= 3:
-            return {" ".join(toks[i:i + 3]) for i in range(len(toks) - 2)}
-        return {" ".join(toks)}
-
-    sh = {i: shingles(txt) for i, txt in enumerate(texts)}
-    expect = {
-        (a, b)
-        for a in sh
-        for b in sh
-        if a != b and sh[a] and len(sh[a] & sh[b]) / len(sh[a]) >= t
-    }
-    assert got == expect
+def test_prefix_filter_joins_keep_exact_boundary_pairs(spark):
+    """Pairs sitting exactly on the threshold are kept: J = 0.5 at t = 0.5
+    and containment = 0.8 at t = 0.8."""
+    texts = [
+        " ".join(f"t{i}" for i in range(9)),           # 7 shingles
+        " ".join(f"t{i}" for i in range(6)) + " v",    # 5 shingles, 4 of them in doc 0
+        " ".join(f"t{i}" for i in range(4)),           # 2 shingles, in docs 0 and 1
+    ]
+    jac, _ = _prefix_filter_pairs(spark, texts, 0.5)
+    assert jac == {(0, 1): 0.5} == _brute_force_pairs(texts, 0.5)[0]  # 4 / (7 + 5 - 4)
+    _, cont = _prefix_filter_pairs(spark, texts, 0.8)
+    assert cont == {(1, 0): 0.8, (2, 0): 1.0, (2, 1): 1.0} == _brute_force_pairs(texts, 0.8)[1]
 
 
 @settings(max_examples=5, deadline=None)

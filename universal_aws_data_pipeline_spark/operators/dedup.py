@@ -477,7 +477,7 @@ def incremental_neardup_filter_indexed(
     id_col = index.id_col
     new_sh = shingled_docs(
         parallelize_text_scan(new_docs.select(id_col, text_col)), id_col, text_col, index.shingle_n
-    ).persist()
+    )
     new_b = _bands_table(
         None, id_col, text_col, index.num_hashes, index.num_bands, index.shingle_n, shingled=new_sh
     ).withColumn("bk_bucket", F.pmod(F.xxhash64("band_key"), F.lit(index.n_buckets))).withColumnRenamed(
@@ -499,13 +499,17 @@ def incremental_neardup_filter_indexed(
     return new_docs.join(dupes, id_col, "left_anti")
 
 
-def _digest_bitmaps(digests: Column, n_words: int = 4) -> list[Column]:
-    """Bit-signature of a digest set: a ``64*n_words``-bit bitmap packed
-    into ``n_words`` longs, bit ``d mod 64`` of word ``(d mod 64n) div 64``
-    set per element — the pair-level bitmap filter of the set-similarity-
-    join literature (the bit-signature cousin of PPJoin+'s suffix filter;
-    both appear in Mann/Augsten/Bouros's empirical evaluation of set
-    similarity joins).
+# Width of the pair filter's digest bitmap, in 64-bit words (256 bits).
+BITMAP_WORDS = 4
+
+
+def _digest_bitmaps(digests: Column) -> list[Column]:
+    """Bit-signature of a digest set: a ``64*BITMAP_WORDS``-bit bitmap
+    packed into ``BITMAP_WORDS`` longs ``bm0..``, with bit ``d mod 64`` of
+    word ``(d mod 64·BITMAP_WORDS) div 64`` set per element — the
+    pair-level bitmap filter of the set-similarity-join literature (Mann,
+    Augsten & Bouros, "An Empirical Evaluation of Set Similarity Join
+    Techniques", VLDB 2016).
 
     The pruning bound is EXACT, not probabilistic: every bit set in A's
     bitmap but not B's is witnessed by at least one element of A\\B, and
@@ -515,20 +519,155 @@ def _digest_bitmaps(digests: Column, n_words: int = 4) -> list[Column]:
         popcount(bits(A) & ~bits(B)) <= |A \\ B|        (containment form)
 
     Collisions only LOWER the left side — the filter can under-prune,
-    never over-prune, so recall is untouched at any width. 256 bits
-    against ~50-digest documents leaves the expected XOR popcount of a
-    non-matching pair (~77) far above the Jaccard-0.5 admission bound
-    (~35), which is what gives the filter its measured 98.8% candidate
-    kill on the sf0.1 corpus (494,223 -> 6,024, exactly the true pair
-    set; see OPTIMIZATION_r14.md)."""
-    n_bits = 64 * n_words
+    never over-prune, so recall is untouched at any width."""
+    n_bits = 64 * BITMAP_WORDS
     return [
-        F.expr(
-            f"aggregate(filter(_dx, d -> pmod(d, {n_bits}) div 64 = {k}), 0L, "
-            f"(acc, d) -> acc | shiftleft(1L, cast(pmod(d, 64) as int)))"
-        ).alias(f"_bm{k}")
-        for k in range(n_words)
+        F.aggregate(
+            F.filter(digests, lambda d: F.shiftright(F.pmod(d, F.lit(n_bits)), 6) == k),
+            F.lit(0).cast("long"),
+            lambda acc, d: acc.bitwiseOR(
+                F.call_function("shiftleft", F.lit(1).cast("long"), F.pmod(d, F.lit(64)).cast("int"))
+            ),
+        ).alias(f"bm{k}")
+        for k in range(BITMAP_WORDS)
     ]
+
+
+def _prefix_filter_join(
+    df: DataFrame | None,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+    shingle_n: int,
+    shingled: DataFrame | None,
+    measure: str,
+) -> DataFrame:
+    """Exact set-similarity self-join by prefix filtering (PPJoin, Xiao et
+    al., WWW 2008), shared by the two public measures:
+
+    * ``"jaccard"`` — unordered pairs ``id_a < id_b`` with
+      ``round(|A∩B| / |A∪B|, 4) >= t``;
+    * ``"containment"`` — ordered pairs ``id_a != id_b`` with the
+      unrounded ``|A∩B| / |A| >= t``.
+
+    Output: (id_a, id_b, <measure>) with the similarity rounded to 4 dp.
+    The pruning bounds are exact, so the result equals the brute-force
+    all-pairs answer — which is how q75 and q110 are graded.
+
+    **Recall contract.** Candidate mining, the digest pre-verify included,
+    runs in 60-bit md5 digest space (``shingle_index_table``'s ``shx64``):
+    a within-pair collision (two distinct shingles of A∪B on one digest)
+    could shrink the digest-image overlap and drop a boundary pair, with
+    about 1e-11 risk per pair of 10k combined shingles. Verification is
+    exact: ``array_intersect`` on the shingle strings of every surviving
+    candidate decides the output and computes its similarity, so false
+    positives are impossible.
+
+    Stages, each written once and parameterized by the measure:
+
+    1. *Prefix mining.* Order digests by ascending document frequency
+       (digest as tiebreak) and keep each doc's first
+       ``|S| - ceil(t·|S|) + 1``. A qualifying pair shares at least
+       ``ceil(t·|A|)`` digests, so fewer than that prefix can be missing
+       from B: the pair shares a prefix digest of A. Jaccard is symmetric,
+       so both sides join on prefixes (checkpointed: both sides read it);
+       containment restricts only the contained side, and the container
+       joins ALL its digests (left lazy — materializing the full postings
+       table is the wrong memory trade at corpus scale). The rarest
+       digests form the prefixes, so boilerplate falls out of every join
+       bucket.
+    2. *Positional filter* on every matched prefix row: a pair's first
+       common digest sits at ranks (i, j) and every other common digest
+       follows it in both docs, so ``|A∩B| <= 1 + min(|A|-i, |B|-j)``. A
+       row is kept when its bound reaches the required overlap
+       ``t/(1+t)·(|A|+|B|)`` (Jaccard) or ``t·|A|`` (containment), so a
+       qualifying pair keeps at least its first common row. The bound is
+       at most ``min(|A|, |B|)``, so this implies the length filter. The
+       distinct pairs carry their sizes to stage 3.
+    3. *Bitmap filter* (``_digest_bitmaps``): prune when the XOR popcount
+       exceeds the largest admissible ``|A Δ B| = (1-t)/(1+t)·(|A|+|B|)``
+       (Jaccard), or the AND-NOT popcount exceeds ``|A\\B| = (1-t)·|A|``
+       (containment). At sf0.1 it leaves exactly the true pairs of q75.
+    4. *Digest pre-verify*: the measure's own comparison on the digest
+       sets, so only its survivors pay the string intersection. At sf0.1
+       it removes nothing the bitmap kept; it stays because a 256-bit
+       bitmap saturates on long documents (13.9k-token docs: bitmap 0%
+       pruned, this stage 24% on q75 and 75% on q110; PERF.md).
+    5. *Exact verify* on the shingle strings.
+
+    ``round(J, 4) >= t`` admits J down to ``t - 5e-5``, so Jaccard mines
+    with ``t - 1e-4``; the 1e-9 slack keeps float rounding from pruning.
+    """
+    from pyspark.sql import Window
+
+    jaccard = measure == "jaccard"
+    if shingled is None:
+        shingled = shingle_index_table(
+            parallelize_text_scan(df.select(id_col, text_col)), id_col, text_col, shingle_n
+        )
+    tm = threshold - 1e-4 if jaccard else threshold
+    eps = 1e-9
+    # 1. prefix mining. The digest set is a column of its own: exploded
+    # as an expression, the size(..) selected beside it re-ran
+    # array_distinct once per exploded row, quadratic in document length
+    # (~40 s per 14k-token doc). explode_outer, because on a plain explode
+    # of a column Spark infers a size(..) > 0 filter onto the file scan;
+    # an empty set's null row finds no match in the joins on s.
+    digests = shingled.select(F.col(id_col).alias("id"), F.array_distinct("shx64").alias("dx"))
+    expl = digests.select("id", F.size("dx").alias("sz"), F.explode_outer("dx").alias("s"))
+    freq = expl.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
+    ranked = expl.join(freq, "s").withColumn(
+        "rn", F.row_number().over(Window.partitionBy("id").orderBy("_df", "s"))
+    )
+    prefix = ranked.filter(F.col("rn") <= F.col("sz") - F.ceil(F.lit(tm) * F.col("sz")) + 1)
+    if jaccard:
+        prefix = prefix.select("id", "s", "sz", "rn").localCheckpoint(eager=True)
+
+    def side(t: DataFrame, x: str, *cols: str) -> DataFrame:
+        # one side of a pair join: id and cols suffixed with _a or _b
+        return t.withColumnsRenamed({c: f"{c}_{x}" for c in ("id", *cols)})
+
+    # 2. positional filter; the required overlap and, for stage 3, the
+    # largest |A Δ B| (Jaccard) or |A \ B| (containment) a pair may have
+    sz_a, sz_b = F.col("sz_a"), F.col("sz_b")
+    if jaccard:
+        required = F.lit(tm / (1.0 + tm)) * (sz_a + sz_b)
+        max_miss = F.lit((1.0 - tm) / (1.0 + tm)) * (sz_a + sz_b)
+    else:
+        required = F.lit(tm) * sz_a
+        max_miss = F.lit(1.0 - tm) * sz_a
+    pairs = (
+        side(prefix, "a", "sz", "rn").join(side(prefix if jaccard else ranked, "b", "sz", "rn"), "s")
+        .filter(F.col("id_a") < F.col("id_b") if jaccard else F.col("id_a") != F.col("id_b"))
+        .filter(1 + F.least(sz_a - F.col("rn_a"), sz_b - F.col("rn_b")) >= required - eps)
+        .select("id_a", "id_b", "sz_a", "sz_b")
+        .distinct()
+    )
+    # 3. bitmap filter
+    bm = digests.select("id", *_digest_bitmaps(F.col("dx")))
+    words = [f"bm{k}" for k in range(BITMAP_WORDS)]
+    op = "^" if jaccard else "& ~"
+    miss_pc = sum(F.bit_count(F.expr(f"{w}_a {op} {w}_b")) for w in words)
+    cand = (
+        pairs.join(side(bm, "a", *words), "id_a").join(side(bm, "b", *words), "id_b")
+        .filter(miss_pc <= max_miss + eps)
+        .select("id_a", "id_b")
+    )
+
+    # 4-5. the pairs whose similarity on the ``col`` sets reaches the
+    # threshold, as ``_sim``: first on the digests, then on the strings
+    def verified(cands: DataFrame, sets: DataFrame, col: str) -> DataFrame:
+        inter = F.size(F.array_intersect(f"{col}_a", f"{col}_b")).cast("double")
+        if jaccard:
+            sim = F.round(inter / (F.size(f"{col}_a") + F.size(f"{col}_b") - inter), 4)
+        else:
+            sim = inter / F.size(f"{col}_a")
+        joined = cands.join(side(sets, "a", col), "id_a").join(side(sets, "b", col), "id_b")
+        return joined.select("id_a", "id_b", sim.alias("_sim")).filter(F.col("_sim") >= threshold)
+
+    pre = verified(cand, digests, "dx").select("id_a", "id_b")
+    exact = verified(pre, shingled.select(F.col(id_col).alias("id"), "sh"), "sh")
+    return exact.select("id_a", "id_b", F.round("_sim", 4).alias(measure))
 
 
 def jaccard_pairs_prefix_filter(
@@ -539,240 +678,33 @@ def jaccard_pairs_prefix_filter(
     shingle_n: int = 3,
     shingled: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact n-gram-Jaccard similarity self-join via prefix filtering — the
-    AllPairs/PPJoin family. Returns every pair with jaccard >= threshold:
-    unlike MinHash-LSH (probabilistic candidates, tunable recall < 1) the
-    pruning bounds are exact in shingle space, so the output equals
-    brute-force all-pairs Jaccard — which is exactly how q75's oracle
-    grades it.
+    """Exact n-gram-Jaccard similarity self-join: every unordered pair
+    (id_a < id_b) with ``round(jaccard, 4) >= threshold``. Unlike
+    MinHash-LSH (probabilistic candidates, tunable recall < 1) the pruning
+    bounds are exact, so the output equals brute-force all-pairs Jaccard.
+    ``shingled`` is a ``shingle_index_table`` (built from ``df`` when
+    absent). See ``_prefix_filter_join`` for the algorithm and the recall
+    contract."""
+    return _prefix_filter_join(df, id_col, text_col, threshold, shingle_n, shingled, "jaccard")
 
-    **Recall contract (probabilistic, unified).** Candidate mining AND
-    candidate pre-verification both run over 60-bit md5 digests of the
-    shingles, so the recall guarantee is probabilistic, not structural:
-    a within-pair digest collision (two distinct shingles of A∪B mapping
-    to one digest) can shrink the digest-image intersection, and a pair
-    sitting exactly at the threshold boundary could in principle be
-    pruned before the exact verification sees it. Both stages share ONE
-    collision class — for a pair with 10k combined shingles the birthday
-    bound at 60 bits is ~1e-11, and only rounded-boundary pairs are even
-    exposed. False positives are impossible at any digest width: every
-    surviving pair is re-verified on the true shingle arrays, and the
-    output ``jaccard`` is computed there (the final exact-verify join is
-    load-bearing for this contract — tests/test_plans.py pins its
-    presence). The graded oracle replays brute-force string-space
-    Jaccard, so a collision would surface as a hash mismatch rather than
-    pass silently.
 
-    The pruning argument: order all shingles by ascending document
-    frequency (rarest first, shingle string as tiebreak — any total order
-    works). For a doc with |S| shingles, keep only its first
-    ``|S| - ceil(t*|S|) + 1`` shingles under that order (the "prefix"). If
-    J(A,B) >= t, then |A∩B| >= ceil(t*|A|), so fewer than the prefix
-    length of A's shingles can be missing from B — A and B MUST share at
-    least one prefix shingle. Equi-joining on prefix shingles therefore
-    finds every qualifying pair.
-
-    Scale shape: candidates come from an equi-join on the prefix-shingle
-    table — never N². Because the prefix keeps each doc's RAREST shingles,
-    bucket sizes in that join are bounded by construction (a boilerplate
-    shingle shared by a million docs has high df and falls out of every
-    prefix); this is the same "join on selective keys" posture as the LSH
-    band join but with an exactness proof. Costs vs LSH: one extra shuffle
-    (the global document-frequency aggregate) and a per-doc window to rank
-    shingles — the window partitions by doc_id, so state is one doc's
-    shingle list, never the corpus. Verification joins candidates back to
-    the full shingle arrays, same as neardup_pairs_jaccard.
-
-    Two further PPJoin prunes run BEFORE the expensive array-intersect
-    verification, both exactness-preserving (they only discard pairs
-    provably below threshold, with a 1e-9 slack so float rounding can
-    never over-prune — verification still computes exact Jaccard):
-
-    * length filter: J(A,B) >= t forces t*|A| <= |B| (and symmetrically),
-      applied inside the candidate join.
-    * positional filter: if the first shingle A and B share (in global df
-      order) sits at ranks (i, j), every other common shingle follows it
-      in BOTH docs, so |A∩B| <= 1 + min(|A|-i, |B|-j); J >= t is
-      equivalent to |A∩B| >= t/(1+t)*(|A|+|B|). The bound test is applied
-      to EVERY matched prefix row (map-side, before the pair-dedup
-      shuffle): a qualifying pair's true first-common token always passes
-      its own bound, so recall is intact, while a failing row is pruned
-      before it ever shuffles. At threshold 0.5 on the sf0.1 corpus this
-      cuts surviving candidates ~25x (1.61M -> 66k) and total wall ~2x.
-    * PAIR-LEVEL positional filter (the full PPJoin bound, round 13): the
-      pair-dedup shuffle aggregates the matched prefix rows instead of
-      distinct()-ing them — same exchange, tiny extra state — giving the
-      prefix overlap count ``po`` and the LAST matched ranks (i*, j*)
-      under the global order. Every common shingle globally before the
-      last matched one lies in BOTH prefixes (it ranks earlier than a
-      prefix member in each doc) and is therefore already counted in
-      ``po``; every other common shingle ranks after (i*, j*) in both
-      docs. So |A∩B| <= po + min(|A|-i*, |B|-j*) — exact, and strictly
-      tighter than the best per-row bound whenever several prefix tokens
-      match. Pairs failing it never reach the array-intersect
-      verification join (the dominant cost).
-    """
-    from pyspark.sql import Window
-
-    if shingled is None:
-        shingled = shingled_docs(
-            parallelize_text_scan(df.select(id_col, text_col)), id_col, text_col, shingle_n
-        ).persist()
-    # The candidate-mining stages (df count, prefix ranking, prefix
-    # equi-join) run in DIGEST space — long keys instead of shingle strings,
-    # which cuts every shuffle in the mining phase (~2x wall on the sf0.1
-    # corpus). The recall guarantee is PROBABILISTIC, not structural: a
-    # within-pair collision (two shingles of A∪B mapping to one digest) can
-    # shrink the image intersection, so J_digest may fall BELOW J_shingle
-    # and a threshold-boundary pair could in principle be pruned before
-    # verification. 60-bit digests make that negligible — for a pair with
-    # 10k combined shingles the birthday bound is ~1e-11, and only pairs
-    # exactly at the threshold boundary could flip. (False positives are
-    # impossible at any width: verification computes exact Jaccard on the
-    # true shingle arrays.) The stored corpus index carries the wide
-    # digests (shingle_index_table's ``shx64``); recompute if absent —
-    # including over old indexes that only have the narrow minhash ``shx``.
-    if "shx64" in shingled.columns:
-        digests = F.array_distinct(F.col("shx64"))
-    else:
-        digests = F.array_distinct(
-            F.transform(F.col("sh"), lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"))
-        )
-    expl = shingled.select(
-        F.col(id_col).alias("_id"), F.size(digests).alias("_sz"), F.explode(digests).alias("s")
-    )
-    freq = expl.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy("_id").orderBy("_df", "s")
-    prefix_len = F.col("_sz") - F.ceil(F.lit(threshold) * F.col("_sz")) + 1
-    # localCheckpoint: BOTH sides of the candidate self-join are this table
-    # (round-13 plan audit: left lazy, each side re-ran the whole prefix
-    # build — explode, the global document-frequency aggregate, and the
-    # per-doc ranking window — so the mining phase executed twice per run;
-    # guide §7.2 duplicated subtrees, §5 cache when reuse beats recompute).
-    # Materializing the prefix inverted index is the canonical PPJoin
-    # posture, and the rows are small by construction: an 8-byte digest +
-    # three small ints per PREFIX shingle (≈ the rarest ~½ of each doc's
-    # distinct shingles at t = 0.5), never the full shingle volume.
-    prefix = (
-        expl.join(freq, "s")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= prefix_len)
-        .select("_id", "s", "_sz", "_rn")
-        .localCheckpoint(eager=True)
-    )
-    eps = 1e-9
-    pa = prefix.select(
-        F.col("_id").alias("id_a"), "s",
-        F.col("_sz").alias("sz_a"), F.col("_rn").alias("rn_a"),
-    )
-    pb = prefix.select(
-        F.col("_id").alias("id_b"), "s",
-        F.col("_sz").alias("sz_b"), F.col("_rn").alias("rn_b"),
-    )
-    overlap_bound = F.lit(1) + F.least(
-        F.col("sz_a") - F.col("rn_a"), F.col("sz_b") - F.col("rn_b")
-    )
-    required = F.lit(threshold / (1.0 + threshold)) * (F.col("sz_a") + F.col("sz_b"))
-    cand_stats = (
-        pa.join(pb, "s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        # length filter: |B| >= t|A| and |A| >= t|B|
-        .filter(
-            (F.col("sz_b") >= F.lit(threshold) * F.col("sz_a") - eps)
-            & (F.col("sz_a") >= F.lit(threshold) * F.col("sz_b") - eps)
-        )
-        # positional filter, pushed to each matched row (see docstring)
-        .filter(overlap_bound >= required - eps)
-        # pair-level PPJoin bound: the dedup exchange doubles as the
-        # aggregation — po common-prefix tokens counted, remaining overlap
-        # capped by the capacity past the LAST matched ranks
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("_po"),
-            F.max("rn_a").alias("_mra"),
-            F.max("rn_b").alias("_mrb"),
-            F.max("sz_a").alias("_sza"),
-            F.max("sz_b").alias("_szb"),
-        )
-        .filter(
-            F.col("_po")
-            + F.least(F.col("_sza") - F.col("_mra"), F.col("_szb") - F.col("_mrb"))
-            >= F.lit(threshold / (1.0 + threshold)) * (F.col("_sza") + F.col("_szb"))
-            - eps
-        )
-    )
-    # Pair-level bitmap filter (round 14, VERDICT r13 item 1 — cut the
-    # candidate volume reaching the array-intersect stage): the pair bounds
-    # above are rank-only and pass ~80x more pairs than survive (measured:
-    # 494,223 candidates for 6,024 pairs, 97% sharing exactly ONE prefix
-    # token — a rank-level bound cannot kill a single-shared-rare-token
-    # pair whose sizes leave enough slack). The bitmap carries 256 bits of
-    # suffix CONTENT per doc: prune when popcount(bits(A) XOR bits(B)) —
-    # an exact lower bound on |A Δ B| — exceeds the largest symmetric
-    # difference the downstream round-4 comparison could still admit
-    # (J >= t - 5e-5, spelled with t - 1e-4 + eps slack so the bitmap can
-    # never out-prune the digest verify below). The published PPJoin+
-    # depth-1 suffix filter was implemented and A/B-measured first: it
-    # prunes only 12.8% here — the Hamming-partition signal needs value-
-    # locality that uniform 60-bit digests do not have — while the bitmap
-    # kills 98.8% (exactly the true pair set) for 8 bytes x 4 per doc.
-    t_eff = threshold - 1e-4
-    bm = shingled.select(F.col(id_col).alias("_bid"), digests.alias("_dx")).select(
-        "_bid", *_digest_bitmaps(F.col("_dx"))
-    )
-    ba = bm.select(F.col("_bid").alias("id_a"), *[F.col(f"_bm{k}").alias(f"_ba{k}") for k in range(4)])
-    bb = bm.select(F.col("_bid").alias("id_b"), *[F.col(f"_bm{k}").alias(f"_bb{k}") for k in range(4)])
-    xor_pc = sum(F.bit_count(F.expr(f"_ba{k} ^ _bb{k}")) for k in range(4))
-    max_delta = (F.col("_sza") + F.col("_szb")).cast("double") * F.lit(
-        (1.0 - t_eff) / (1.0 + t_eff)
-    )
-    cand = (
-        cand_stats.join(ba, "id_a")
-        .join(bb, "id_b")
-        .filter(xor_pc.cast("double") <= max_delta + eps)
-        .select("id_a", "id_b")
-    )
-    # Digest-space pre-verification (round-13 optimization, guide §1.2
-    # step 2 — make the per-task work cheap): the surviving candidate set
-    # was ~100x the true pair set before the bitmap filter above, and
-    # intersecting STRING shingle arrays for every candidate was the
-    # query's single largest cost (measured at sf0.1: 494k candidates,
-    # 3.7 s string verify vs 1.7 s on the 8-byte digest arrays — string
-    # hashing dominates array_intersect). The bitmap filter only proves
-    # pairs BELOW threshold; this stage applies the IDENTICAL round-4
-    # comparison, so the output set is decided here and re-asserted on
-    # strings below.
-    # The prefilter applies the IDENTICAL round-4 jaccard comparison in
-    # digest space; absent a within-pair digest collision, per-pair digest
-    # jaccard EQUALS string jaccard (distinct shingles map to distinct
-    # digests), so the survivor set is exactly the final pair set and the
-    # exact string verification below re-asserts it. This moves the
-    # verification recall guarantee from structural to the SAME ~1e-11
-    # probabilistic class as the digest-space mining above (a within-pair
-    # collision could in principle shift a rounded boundary pair);
-    # false positives remain impossible — survivors are re-verified on the
-    # true shingle arrays and the output jaccard is computed there.
-    da = shingled.select(F.col(id_col).alias("id_a"), digests.alias("dx_a"))
-    db = shingled.select(F.col(id_col).alias("id_b"), digests.alias("dx_b"))
-    dinter = F.size(F.array_intersect(F.col("dx_a"), F.col("dx_b"))).cast("double")
-    dunion = (F.size("dx_a") + F.size("dx_b")).cast("double") - dinter
-    djac = F.when(dunion > 0, dinter / dunion).otherwise(F.lit(0.0))
-    pre = (
-        cand.join(da, "id_a")
-        .join(db, "id_b")
-        .filter(F.round(djac, 4) >= threshold)
-        .select("id_a", "id_b")
-    )
-    a = shingled.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = shingled.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    joined = pre.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    union = (F.size("sh_a") + F.size("sh_b")).cast("double") - inter
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(0.0))
-    return (
-        joined.select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
-    )
+def containment_pairs_prefix_filter(
+    df: DataFrame | None,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    threshold: float = 0.8,
+    shingle_n: int = 3,
+    shingled: DataFrame | None = None,
+) -> DataFrame:
+    """Exact shingle-CONTAINMENT join: every ORDERED pair (a, b) with
+    ``|Sa ∩ Sb| / |Sa| >= threshold`` — the truncated-copy detector.
+    Containment is the asymmetry Jaccard misses: a document that is a
+    clean excerpt of a 10x-longer one has J ≈ 0.1 (invisible to q75's
+    symmetric join and unreliable for MinHash bands) but containment 1.0.
+    ``shingled`` is a ``shingle_index_table`` (built from ``df`` when
+    absent). See ``_prefix_filter_join`` for the algorithm and the recall
+    contract."""
+    return _prefix_filter_join(df, id_col, text_col, threshold, shingle_n, shingled, "containment")
 
 
 def span_overlap_profile(
@@ -899,152 +831,6 @@ def neardup_stream_fn(
     return fn
 
 
-def containment_pairs_prefix_filter(
-    df: DataFrame | None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    shingle_n: int = 3,
-    shingled: DataFrame | None = None,
-) -> DataFrame:
-    """Exact shingle-CONTAINMENT join: every ORDERED pair (a, b) with
-    ``|Sa ∩ Sb| / |Sa| >= threshold`` — the truncated-copy detector.
-    Containment is the asymmetry Jaccard misses: a document that is a
-    clean excerpt of a 10x-longer one has J ≈ 0.1 (invisible to q75's
-    symmetric join and unreliable for MinHash bands) but containment 1.0.
-
-    Prefix-filter recall argument, asymmetric form: order shingles by
-    global rarity; for the CONTAINED side keep the first
-    ``|Sa| - ceil(t·|Sa|) + 1`` shingles. If containment >= t then at
-    least ceil(t·|Sa|) of a's shingles appear in b, and fewer than the
-    prefix length can be missing from b — so some prefix shingle of a is
-    in b. The container side joins with ALL its shingles (no length
-    restriction exists on b — that is the point), so the equi-join
-    (a-prefix × b-full) finds every qualifying ordered pair. Two
-    exactness-preserving prunes run pre-verification: |Sb| >= t·|Sa|
-    (length), and the positional bound
-    ``1 + min(|Sa|-rank_a, |Sb|-rank_b) >= t·|Sa|`` per matched row.
-
-    **Recall contract (probabilistic, unified).** As in
-    :func:`jaccard_pairs_prefix_filter`, candidate mining AND the
-    digest-space pre-verification both operate on 60-bit md5 shingle
-    digests: a within-pair digest collision can shrink the digest-image
-    intersection, so a containment-boundary pair could in principle be
-    pruned before exact verification — one shared ~1e-11 collision class
-    covering both stages (birthday bound for a 10k-combined-shingle
-    pair). False positives are impossible at any width: survivors are
-    re-verified on the true shingle arrays and the output ``containment``
-    is computed there (the exact-verify join is load-bearing —
-    tests/test_plans.py pins its presence); the graded oracle replays raw
-    string-space containment, so a collision surfaces as a hash mismatch.
-
-    Scale shape: candidate cardinality is governed by the contained side's
-    RAREST shingles — boilerplate shared by the whole corpus has high df
-    and never enters a prefix; the container side is a plain exploded
-    table, shuffled once on the shingle key.
-    """
-    from pyspark.sql import Window
-
-    if shingled is None:
-        shingled = shingled_docs(
-            parallelize_text_scan(df.select(id_col, text_col)), id_col, text_col, shingle_n
-        ).persist()
-    if "shx64" in shingled.columns:
-        digests = F.array_distinct(F.col("shx64"))
-    else:
-        digests = F.array_distinct(
-            F.transform(F.col("sh"), lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"))
-        )
-    expl = shingled.select(
-        F.col(id_col).alias("_id"), F.size(digests).alias("_sz"), F.explode(digests).alias("s")
-    )
-    freq = expl.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
-    w = Window.partitionBy("_id").orderBy("_df", "s")
-    # (round-13 audit: both candidate-join sides consume this ranked table
-    # and the subtree therefore executes twice; a localCheckpoint was
-    # measured wall-NEUTRAL here — 1.5 vs 1.7 s in-session at sf0.1 — and
-    # materializing the FULL postings table is the wrong memory trade at
-    # corpus scale, so the lazy double-build is kept deliberately)
-    ranked = expl.join(freq, "s").withColumn("_rn", F.row_number().over(w))
-    prefix_len = F.col("_sz") - F.ceil(F.lit(threshold) * F.col("_sz")) + 1
-    eps = 1e-9
-    pa = ranked.filter(F.col("_rn") <= prefix_len).select(
-        F.col("_id").alias("id_a"), "s",
-        F.col("_sz").alias("sz_a"), F.col("_rn").alias("rn_a"),
-    )
-    pb = ranked.select(
-        F.col("_id").alias("id_b"), "s",
-        F.col("_sz").alias("sz_b"), F.col("_rn").alias("rn_b"),
-    )
-    required = F.lit(threshold) * F.col("sz_a")
-    overlap_bound = F.lit(1) + F.least(
-        F.col("sz_a") - F.col("rn_a"), F.col("sz_b") - F.col("rn_b")
-    )
-    cand = (
-        pa.join(pb, "s")
-        .filter(F.col("id_a") != F.col("id_b"))
-        .filter(F.col("sz_b") >= required - eps)
-        .filter(overlap_bound >= required - eps)
-        .select("id_a", "id_b", "sz_a")
-        .distinct()
-    )
-    # Pair-level bitmap filter, containment form (round 14 — the q75
-    # retune's asymmetric twin): popcount(bits(A) & ~bits(B)) is an exact
-    # lower bound on |A \ B| (every A-only bit is witnessed by a distinct
-    # element of A\B), and containment >= t forces |A \ B| <= (1-t)|A| —
-    # prune when the bitmap already proves more misses than that. Sound at
-    # any width (collisions only under-prune); the unrounded comparison
-    # below is untouched, so the output set is still decided by the digest
-    # containment and re-asserted on the true shingle arrays.
-    bm = shingled.select(F.col(id_col).alias("_bid"), digests.alias("_dx")).select(
-        "_bid", *_digest_bitmaps(F.col("_dx"))
-    )
-    ba = bm.select(F.col("_bid").alias("id_a"), *[F.col(f"_bm{k}").alias(f"_ba{k}") for k in range(4)])
-    bb = bm.select(F.col("_bid").alias("id_b"), *[F.col(f"_bm{k}").alias(f"_bb{k}") for k in range(4)])
-    miss_pc = sum(F.bit_count(F.expr(f"_ba{k} & ~_bb{k}")) for k in range(4))
-    cand = (
-        cand.join(ba, "id_a")
-        .join(bb, "id_b")
-        .filter(
-            miss_pc.cast("double")
-            <= (F.lit(1.0) - F.lit(threshold)) * F.col("sz_a").cast("double") + eps
-        )
-        .select("id_a", "id_b")
-    )
-    # Digest-space pre-verification (the q75 round-13 retune): intersect
-    # the 8-byte digest arrays for the full candidate set and apply the
-    # IDENTICAL unrounded containment comparison; only survivors pay the
-    # string-array intersection. Absent a within-pair digest collision the
-    # digest containment EQUALS the string containment, so the survivor
-    # set is exactly the output set (same ~1e-11 probabilistic recall
-    # class as the digest-space mining; false positives impossible — the
-    # exact verify below re-asserts on the true shingle arrays).
-    da = shingled.select(F.col(id_col).alias("id_a"), digests.alias("dx_a"))
-    db = shingled.select(F.col(id_col).alias("id_b"), digests.alias("dx_b"))
-    dcont = (
-        F.size(F.array_intersect(F.col("dx_a"), F.col("dx_b"))).cast("double")
-        / F.size("dx_a").cast("double")
-    )
-    pre = (
-        cand.join(da, "id_a")
-        .join(db, "id_b")
-        .filter(dcont >= threshold)
-        .select("id_a", "id_b")
-    )
-    a = shingled.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = shingled.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    joined = pre.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b"))).cast("double")
-    cont = inter / F.size("sh_a").cast("double")
-    # filter on the UNROUNDED value (the prefix-filter recall guarantee is
-    # for true containment >= t; the oracle's WHERE matches) — rounding is
-    # presentation only, same convention as cosine_pairs_blocked
-    return (
-        joined.filter(cont >= threshold)
-        .select("id_a", "id_b", F.round(cont, 4).alias("containment"))
-    )
-
-
 def incremental_containment_filter_indexed(
     new_docs: DataFrame,
     index: "NeardupIndex",
@@ -1070,7 +856,7 @@ def incremental_containment_filter_indexed(
     id_col = index.id_col
     new_sh = shingled_docs(
         parallelize_text_scan(new_docs.select(id_col, text_col)), id_col, text_col, index.shingle_n
-    ).persist()
+    )
     digest = lambda col: F.array_distinct(  # noqa: E731
         F.transform(col, lambda s: F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long"))
     )

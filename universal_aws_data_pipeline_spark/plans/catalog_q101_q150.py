@@ -485,9 +485,9 @@ def q110(spark: SparkSession, sf_dir: str) -> DataFrame:
     misses (an excerpt of a 10x-longer doc has J ≈ 0.1 but containment
     1.0). Asymmetric prefix filter: contained side joins its rarity-prefix,
     container side joins ALL its shingles (no length restriction on the
-    container — that's the point); positional + length prunes before exact
-    verification. Oracle is brute-force all ordered pairs.
-    See operators/dedup.py::containment_pairs_prefix_filter."""
+    container — that's the point); positional and bitmap prunes before
+    exact verification. Oracle is brute-force all ordered pairs.
+    See operators/dedup.py::_prefix_filter_join."""
     import os
 
     from universal_aws_data_pipeline_spark.operators.dedup import (
